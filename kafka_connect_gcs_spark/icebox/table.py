@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_connect_gcs_spark.session import local_frame
+
 # ---------------------------------------------------------------------------
 # schema model (name-based, additive evolution with safe widening)
 # ---------------------------------------------------------------------------
@@ -463,7 +465,7 @@ class IceboxTable:
                 os.path.join(self.root, e.path)
             )
         if not by_schema:
-            return self.spark.createDataFrame([], target_st)
+            return local_frame(self.spark, [], target_st)
         parts: list[DataFrame] = []
         for sid, files in by_schema.items():
             file_schema = self._schema_by_id(meta, sid)

@@ -285,8 +285,10 @@ def unigram_logprob(
     ``ln(c/tot)`` sums to the same total as ``k·ln(c/tot)`` over distinct
     pairs (the 6-dp round absorbs ulp-level summation-order differences,
     which a double sum over a shuffle already has). The vocabulary agg is
-    map-side combined so its exchange carries ≈|vocab per partition|; the
-    per-doc sum is the only data-sized exchange. The corpus total is a
+    map-side combined so its exchange carries ≈|vocab per partition|. Two
+    exchanges are data-sized: the vocabulary join shuffles every word
+    occurrence (the exploded side has no map-side combine), and the
+    per-doc sum follows it. The corpus total is a
     1-row broadcast, not a driver constant baked into the plan; the
     vocabulary join stays shuffled by contract (vocab grows with the
     corpus — AQE broadcasts it at runtime when it is actually small).
@@ -336,7 +338,10 @@ def bigram_logprob(
     a double sum over a shuffle already has). The bigram-count agg is
     map-side combined (exchange carries ≈|distinct bigrams per
     partition|); prefix counts ``c(w ·)`` reduce the bigram table again
-    by first word; the per-doc sum is the only data-sized exchange. No
+    by first word. Three exchanges are data-sized: the two LM joins
+    (bigram counts, then prefix counts) each shuffle every bigram
+    occurrence (the exploded side has no map-side combine), and the
+    per-doc sum follows them. No
     broadcast of the LM: bigram vocabulary grows with the corpus, so the
     join is a plain shuffled join on the bigram key (AQE converts it to
     a broadcast at runtime when the fitted LM is actually small).

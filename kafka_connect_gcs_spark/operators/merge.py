@@ -32,11 +32,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kafka_connect_gcs_spark.config import EngineConfig
 from kafka_connect_gcs_spark.icebox.table import Field, IceboxTable, ManifestEntry
 from kafka_connect_gcs_spark.operators.dedup import lww_dedup
+from kafka_connect_gcs_spark.session import adaptive_disabled, local_frame
 
 #: canonical CDC target-table schema (input_hint payload + LWW bookkeeping).
 #: ``deleted`` rows are TOMBSTONES: a delete must keep its (doc_id,
@@ -173,15 +173,10 @@ def prune_affected_files(
     ranged = [m for m in manifests if m.min_doc_id is not None]
     if not ranged:
         return no_stats
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         [(m.path, m.min_doc_id, m.max_doc_id) for m in ranged],
-        T.StructType(
-            [
-                T.StructField("path", T.StringType()),
-                T.StructField("lo", T.StringType()),
-                T.StructField("hi", T.StringType()),
-            ]
-        ),
+        "path string, lo string, hi string",
     )
     hit = (
         change_keys.select("doc_id")
@@ -394,7 +389,8 @@ def merge_into(
                 .select(*out_cols)
             )
         if need_prune and ranged_manifests:
-            ranges_df = spark.createDataFrame(
+            ranges_df = local_frame(
+                spark,
                 [(m.path, m.min_doc_id, m.max_doc_id) for m in ranged_manifests],
                 "path string, lo string, hi string",
             )
@@ -434,12 +430,8 @@ def merge_into(
         meta_df = branches[0]
         for br in branches[1:]:
             meta_df = meta_df.unionByName(br)
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with adaptive_disabled(spark):
             meta_rows = meta_df.collect()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         if need_lineage:
             from collections import namedtuple
 

@@ -126,9 +126,10 @@ def bm25_topk(
     #  * corpus stats — doc count, non-null-text count, Σ word counts —
     #    in ONE light docs pass (tokenize+size only; `sum(size(words))`
     #    is the same exact integer as the former Σ max(dl) over postings:
-    #    dl IS size(words) per doc, zero-word docs contribute 0 to both,
-    #    null text yields a null size that sum skips — so the avgdl
-    #    double is bit-identical);
+    #    dl IS size(words) per doc, zero-word and null-text docs
+    #    contribute 0 to both — so the avgdl double is bit-identical;
+    #    the coalesce sits INSIDE size() because under ANSI off with
+    #    legacy sizeOfNull, size(NULL) is -1, not NULL);
     #  * the query-term collect;
     #  * the postings cache materialization (eager mode), so the dfreq
     #    pass below reads memory instead of re-tokenizing.
@@ -141,7 +142,13 @@ def bm25_topk(
         return docs.agg(
             F.count(F.lit(1)).alias("n_all"),
             F.count(text_col).alias("n_text"),
-            F.sum(F.size(words(F.col(text_col)))).alias("s"),
+            F.sum(
+                F.size(
+                    F.coalesce(
+                        words(F.col(text_col)), F.array().cast("array<string>")
+                    )
+                )
+            ).alias("s"),
         ).collect()[0]
 
     from concurrent.futures import ThreadPoolExecutor

@@ -40,19 +40,30 @@ Scale design (NOT the reference's sequential iterator):
   the picklable client; ranged chunk reads become HTTP Range requests
   against a real bucket endpoint (see store.py / test_object_store.py,
   the FakeGCS.java:22-47 pattern).
+* DECODE ONCE PER POLL: the scan plan is a JVM ``LocalRelation`` (no
+  Python job to read it back), and :meth:`ArchiveTailer.poll` persists the
+  decoded records, so the batch's narrow metadata pass and its heavy merge
+  pass both read the same decode instead of decoding the chunks twice. A
+  tailer holds at most one cached poll: the next ``poll()`` releases it,
+  including the one that reports caught-up, and so does dropping the
+  tailer.
 """
 
 from __future__ import annotations
 
 import gzip
+import hashlib
 import io
 import re
+import weakref
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_connect_gcs_spark.session import local_frame
 from kafka_connect_gcs_spark.sources.formats import ByteLengthFormat, CorruptRecord
 from kafka_connect_gcs_spark.sources.store import as_store
 
@@ -487,7 +498,7 @@ def ingest_archive(pipe, tailer: "ArchiveTailer", max_polls: int = 1000) -> list
         frontier = ",".join(
             f"{t}-{p}:{k}@{o}" for (t, p), (k, o) in sorted(tailer.offsets.items())
         )
-        batch_id = "arch-" + __import__("hashlib").md5(
+        batch_id = "arch-" + hashlib.md5(
             (str(sorted(before.items())) + "→" + frontier).encode()
         ).hexdigest()[:16]
         lineage = pipe.run_batch_df(decode_change_events(df), batch_id)
@@ -595,7 +606,15 @@ class ArchiveTailer:
     index's last offset — no aggregation over the returned records, so a
     poll costs one listing plus the tiny index JSONs (the reference walks
     record-by-record to learn the same thing). ``max_chunks_per_poll`` is
-    the batch limit (A25, max.poll.records at chunk granularity)."""
+    the batch limit (A25, max.poll.records at chunk granularity).
+
+    Each poll is decoded exactly once: the returned DataFrame is persisted
+    (``MEMORY_AND_DISK``), so every pass the caller makes over the batch
+    reads the cached records, and an indexless file's last offset comes
+    from the same cache. The tailer holds at most one cached poll. It
+    lives until the next ``poll()`` — which releases it first, also when
+    that poll returns None — or until the tailer is garbage-collected, so
+    a tailer that has reported caught-up holds no cache."""
 
     def __init__(
         self,
@@ -624,10 +643,14 @@ class ArchiveTailer:
         #: for its own partition, others still honor the marker
         self.start_marker = start_marker
         self.max_chunks_per_poll = max_chunks_per_poll
+        #: unpersists the cached poll; calling it again is a no-op
+        self._release_cached = lambda: None
 
     def poll(self) -> "DataFrame | None":
         """Records past the current offsets (None when caught up), with
-        ``self.offsets`` advanced to cover everything returned."""
+        ``self.offsets`` advanced to cover everything returned. Releases
+        the previous poll's cached records first."""
+        self._release_cached()
         plan = plan_archive_scan(
             self.store,
             topics=self.topics,
@@ -640,15 +663,16 @@ class ArchiveTailer:
             plan = plan[: self.max_chunks_per_poll]
         if not plan:
             return None
-        df = _decode_plan(self.spark, self.store, self.fmt, plan, self.io_filter)
+        df = _decode_plan(
+            self.spark, self.store, self.fmt, plan, self.io_filter
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        self._release_cached = weakref.finalize(self, df.unpersist)
+        self._release_cached.atexit = False  # the JVM may be gone by then
         indexless = [p for p in plan if p["last_offset"] < 0]
         if indexless:
             # learn indexless files' max offsets from the data in ONE pass
-            # over a cached decode (a per-file agg would re-decode every
-            # planned chunk once per file; the caller reuses the cache)
-            from pyspark import StorageLevel
-
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            # over the cached decode (a per-file agg would re-decode every
+            # planned chunk once per file)
             maxima = {
                 (r.topic, r.partition): r.mx
                 for r in df.groupBy("topic", "partition")
@@ -656,9 +680,7 @@ class ArchiveTailer:
                 .collect()
             }
             for p in indexless:
-                p["last_offset"] = maxima.get(
-                    (p["topic"], p["partition"]), -1
-                ) if maxima.get((p["topic"], p["partition"])) is not None else -1
+                p["last_offset"] = maxima.get((p["topic"], p["partition"]), -1)
         # advance offsets from the PLANNED chunks only (a truncated poll must
         # not skip unread chunks); GCSOffset order = (key, offset) lexicographic
         advanced = False
@@ -676,7 +698,7 @@ class ArchiveTailer:
             # every planned chunk was already consumed (e.g. a fully-read
             # indexless file that can't be pruned by metadata): report
             # caught-up instead of handing the caller an empty batch forever
-            df.unpersist()
+            self._release_cached()
             return None
         return df
 
@@ -722,13 +744,17 @@ def _decode_plan(
     store = as_store(root)
     io_filter = io_filter or GzipFilter()
     if not plan:
-        return spark.createDataFrame([], RECORDS_SCHEMA)
+        return local_frame(spark, [], RECORDS_SCHEMA)
     plan_schema = (
         "data_key string, topic string, partition int, byte_offset long, "
         "byte_length long, first_record_offset long, resume_after long, "
         "last_offset long"
     )
-    plan_df = spark.createDataFrame(
+    # a LocalRelation: its scan already splits the chunk rows into
+    # min(chunks, defaultParallelism) partitions, so no exchange is needed
+    # to fan the decode out
+    plan_df = local_frame(
+        spark,
         [
             (
                 p["data_key"], p["topic"], p["partition"], p["byte_offset"],
@@ -739,8 +765,6 @@ def _decode_plan(
         ],
         plan_schema,
     )
-    parallelism = min(len(plan), spark.sparkContext.defaultParallelism)
-    plan_df = plan_df.repartition(parallelism)
 
     def decode(batches):
         import pandas as pd
@@ -781,6 +805,10 @@ def _decode_plan(
                     rows["headers"].append(
                         [{"key": hk, "value": hv} for hk, hv in h]
                     )
-            yield pd.DataFrame(rows, columns=list(rows))
+            if rows["offset"]:
+                # an all-empty frame infers float64 columns, which Arrow
+                # cannot convert to the headers type (e.g. a resumed
+                # indexless file with nothing new in it)
+                yield pd.DataFrame(rows, columns=list(rows))
 
     return plan_df.mapInPandas(decode, schema=RECORDS_SCHEMA)

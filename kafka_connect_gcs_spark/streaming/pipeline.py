@@ -38,6 +38,7 @@ from kafka_connect_gcs_spark.icebox.table import IceboxTable
 from kafka_connect_gcs_spark.metrics import Metrics, create_metrics
 from kafka_connect_gcs_spark.operators.merge import CDC_TABLE_FIELDS, merge_into
 from kafka_connect_gcs_spark.operators.validate import valid_expr
+from kafka_connect_gcs_spark.session import adaptive_disabled, local_frame
 
 
 def _list_segments(feed_dir: str) -> list[str]:
@@ -287,8 +288,8 @@ class CdcPipeline:
         ]
         no_stats_paths = [m.path for m in snap.manifests if m.min_doc_id is None]
         if ranged:
-            ranges_df = self.spark.createDataFrame(
-                ranged, "path string, lo string, hi string"
+            ranges_df = local_frame(
+                self.spark, ranged, "path string, lo string, hi string"
             )
             # no doc_id-level distinct before the range join: the join is a
             # broadcast nested-loop against a handful of file ranges, so
@@ -344,13 +345,8 @@ class CdcPipeline:
         # micro-batch vs one job without it. Micro-batch latency is driver
         # dispatch-bound (guide §2.2/§7); runtime re-optimization has
         # nothing to improve on metadata-scale relations.
-        conf = self.spark.conf
-        prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with adaptive_disabled(self.spark):
             rows = meta_df.collect()
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
         from collections import namedtuple
 

@@ -388,6 +388,57 @@ def test_archive_to_cdc_bridge_end_to_end(spark, root, tmp_path):
     assert ingest_archive(pipe, ArchiveTailer(spark, root, FMT, offsets=dict(tailer.offsets))) == []
 
 
+def test_ingest_archive_releases_cached_polls(spark, root, tmp_path):
+    """Each poll's decode is cached once and released by the next poll, so
+    draining an archive — including an indexless file, whose last offset
+    is learned from the cached decode — leaves no persisted RDD behind."""
+    from kafka_connect_gcs_spark.config import EngineConfig
+    from kafka_connect_gcs_spark.sources.archive import (
+        ArchiveTailer,
+        index_key_for,
+        ingest_archive,
+    )
+    from kafka_connect_gcs_spark.streaming.pipeline import CdcPipeline
+
+    def flush(first, n):
+        rows = [
+            ("changes", 0, off, None, json.dumps({
+                "doc_id": f"d{off % 40:03d}", "offset": off, "op": "I",
+                "tokens": [off % 50, 1], "n_tok": 2, "source": "s",
+            }).encode())
+            for off in range(first, first + n)
+        ]
+        return write_archive(
+            spark.createDataFrame(
+                rows, "topic string, partition int, offset long, key binary, "
+                "value binary",
+            ),
+            root, "2026-08-16", FMT, chunk_threshold=2048,
+        )
+
+    flush(0, 120)
+    (second,) = flush(120, 60)
+    os.remove(os.path.join(root, index_key_for(second["data_key"])))
+
+    pipe = CdcPipeline(spark, EngineConfig(
+        table_path=str(tmp_path / "table"),
+        feed_path=str(tmp_path / "nofeed"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        shuffle_partitions=4,
+    ))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    tailer = ArchiveTailer(spark, root, FMT, max_chunks_per_poll=3)
+    lineages = ingest_archive(pipe, tailer)
+    assert len(lineages) >= 3
+    assert sum(ln["events_in"] for ln in lineages) == 180
+    assert tailer.offsets[("changes", 0)] == (second["data_key"], 179)
+    assert jsc.getPersistentRDDs().size() == before
+    # a caught-up poll over the consumed indexless file caches nothing
+    assert tailer.poll() is None
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_tail_archive_forever_picks_up_new_flushes(spark, root, tmp_path):
     """A28 over archives: the poll loop drains, idles, and catches a flush
     that lands between polls — exactly-once, no duplicates."""

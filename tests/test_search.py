@@ -119,3 +119,30 @@ def test_bm25_eager_releases_postings_cache(spark, docs):
     got = {(r.query_id, r.doc_id) for r in lazy.collect()}
     want = {(r.query_id, r.doc_id) for r in out.collect()}
     assert got == want
+
+
+def test_bm25_avgdl_ignores_null_text_under_legacy_size_of_null(spark):
+    """avgdl must not depend on session confs: with ANSI off and legacy
+    sizeOfNull, size(NULL) is -1, yet a null-text doc still adds 0 words."""
+    docs = spark.createDataFrame(CORPUS + [(5, None)], "doc_id long, text string")
+    queries = spark.createDataFrame(
+        [(100, "the cat"), (200, "quantum dog")], ["query_id", "qtext"]
+    )
+
+    def scores():
+        return {
+            (r["query_id"], r["doc_id"]): r["score"]
+            for r in bm25_topk(docs, queries, k=4, eager=False).collect()
+        }
+
+    want = scores()
+    legacy = {"spark.sql.ansi.enabled": "false", "spark.sql.legacy.sizeOfNull": "true"}
+    prev = {key: spark.conf.get(key) for key in legacy}
+    try:
+        for key, value in legacy.items():
+            spark.conf.set(key, value)
+        got = scores()
+    finally:
+        for key, value in prev.items():
+            spark.conf.set(key, value)
+    assert got == want
